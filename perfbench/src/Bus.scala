@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Waits until Spark's listener bus has delivered every posted event,
+  * so a listener's view of a finished pass is complete. The bus is
+  * package-private to Spark, hence this package.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
